@@ -13,6 +13,7 @@ similarity search, text analysis, multimodal columns — expressed with
 built-in Spark SQL so Catalyst/Tungsten pick the physical strategy.
 """
 
+from n5_dask_spark import zipguard
 from n5_dask_spark.session import get_spark
 from n5_dask_spark.catalog import TABLES, load_tables
 from n5_dask_spark.registry import REGISTRY, register, Query
@@ -20,3 +21,5 @@ from n5_dask_spark.registry import REGISTRY, register, Query
 __all__ = ["get_spark", "TABLES", "load_tables", "REGISTRY", "register", "Query"]
 
 __version__ = "0.1.0"
+
+zipguard.install_in_task_worker()

@@ -28,16 +28,6 @@ FRAME_BYTES = 64  # fake fixed-size frame
 FRAME_STRIDE = 4  # keep every 4th frame
 
 
-def decode_video_frames(payload: bytes) -> "object":
-    """Real video decode — stubbed: no av/ffmpeg in this container. The
-    frame-sampling plumbing below is real; swap this in production."""
-    try:
-        import av  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError("video decoding requires pyav/ffmpeg (not installed)") from exc
-    raise NotImplementedError("unreachable in this container")
-
-
 @register(
     "multimodal_frame_sample",
     oracle=f"""

@@ -54,7 +54,13 @@ class N5BlockPartition(InputPartition):
 
 
 class N5DataSource(DataSource):
-    """Reads an N5 dataset as one row per block."""
+    """Reads an N5 dataset as one row per block.
+
+    ``parallelism`` is the driver's ``defaultParallelism``, bound by
+    :func:`register_n5_source`: planning runs in a Python worker, which has
+    no session to ask."""
+
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -72,20 +78,21 @@ class N5DataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> "N5Reader":
-        return N5Reader(self.options)
+        return N5Reader(self.options, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> "N5Writer":
         return N5Writer(self.options, [f.name for f in schema.fields])
 
 
 class N5Reader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None = None):
         self.container = options.get("path")
         self.dataset = options.get("dataset")
         if not self.container or not self.dataset:
             raise ValueError("n5 source requires .option('path', ...) and .option('dataset', ...)")
         self.start = options.get("start")
         self.end = options.get("end")
+        self.parallelism = parallelism
         self._attrs = None
 
     def _get_attrs(self):
@@ -189,20 +196,11 @@ class N5Reader(DataSourceReader):
             if hi > lo
         ]
 
-    @staticmethod
-    def _target_partitions() -> int:
+    def _target_partitions(self) -> int:
         per_core = os.environ.get("SPARK_GRAFT_N5DS_TASKS_PER_CORE", "")
         k = int(per_core) if per_core.isdigit() and int(per_core) > 0 else 4
-        par = 0
-        try:
-            from pyspark.sql import SparkSession
-
-            active = SparkSession.getActiveSession()
-            if active is not None:
-                par = int(active.sparkContext.defaultParallelism)
-        except Exception:
-            par = 0  # Connect or no active session: fall through to env
-        if par <= 0:
+        par = self.parallelism
+        if not par:  # source registered without register_n5_source
             cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
             par = int(cpus) if cpus.isdigit() and int(cpus) > 0 else 32
         return max(1, par * k)
@@ -311,4 +309,11 @@ def register_n5_source(spark) -> None:
     from n5_dask_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
-    spark.dataSource.register(N5DataSource)
+    # a class built here is not importable by name, so cloudpickle ships it
+    # by value and the planner worker sees this session's parallelism
+    bound = type(
+        N5DataSource.__name__,
+        (N5DataSource,),
+        {"parallelism": int(spark.sparkContext.defaultParallelism)},
+    )
+    spark.dataSource.register(bound)

@@ -193,12 +193,6 @@ def delete_file(path: str) -> None:
         f.delete_file(p)
 
 
-def make_dirs(path: str) -> None:
-    """mkdir -p; a no-op on object stores (keys need no directories)."""
-    fs, p = _resolve(path)
-    fs.create_dir(p, recursive=True)
-
-
 def list_files(dir_path: str) -> set[str] | None:
     """Recursive file listing under a URI directory, as slash-joined paths
     RELATIVE to it — or None if the filesystem cannot list (caller falls

@@ -10,9 +10,9 @@ workflow (n5 -> tif series -> n5, README.md:17-21) requires. Multi-page/
 compressed/RGB TIFFs raise with a clear message.
 
 Pipelines are Spark-first:
-- tif_series_to_n5: binaryFile scan of the *.tif glob (one row per slice,
-  slice index parsed from the filename — the dask_image.imread analog,
-  /root/reference/src/tif_to_n5.py:21) -> decode in mapInPandas ->
+- tif_series_to_n5: driver-side listing of the *.tif glob (one row per
+  slice, slice index parsed from the filename — the dask_image.imread
+  analog, reference tif_to_n5.py:21) -> read + decode in mapInPandas ->
   per-slice fragments feed the SAME rechunk shuffle used everywhere ->
   blocks written one-task-per-block. The reference's manual Z-slab loop
   (src/tif_to_n5.py:31-58) is unnecessary: partition-at-a-time execution
@@ -35,7 +35,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5 import fuse
@@ -44,6 +43,7 @@ from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes
 from n5_dask_spark.sources.n5.transforms import BLOCK_SCHEMA_DDL, cast_blocks, rechunk
 from n5_dask_spark.sources.n5.reader import decoded_blocks
 from n5_dask_spark.sources.n5.writer import _atomic_write, write_blocks
+from n5_dask_spark.udfbatch import bounded_frames
 
 # TIFF tag ids
 _W, _H, _BITS, _COMP, _PHOTO, _STRIP_OFF, _SPP, _ROWS_PER_STRIP, _STRIP_CNT, _SFMT = (
@@ -376,11 +376,10 @@ def read_tiff(path: str) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """S1: lazy scan of a z-slice TIFF series -> (z, raw) rows. Slice order =
-    numeric sort of the trailing integer in the filename (imread glob
-    semantics, one file per z)."""
-    tune_session(spark)
+def _series_files(input_dir: str) -> list[str]:
+    """The slice files of a z-slice TIFF series, in z order: the top-level
+    ``*.tif`` files of ``input_dir``, numerically sorted by the trailing
+    integer in the filename (imread glob semantics, one file per z)."""
     # Mid-write series refusal (r14 probe, N5-scan parity): the series
     # sink claims this marker for its job window. Scanning a partial
     # series is SILENT WRONG DATA here, not just missing rows — z is
@@ -411,35 +410,53 @@ def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     if not files:
         raise FileNotFoundError(f"no *.tif in {input_dir}")
     # Zero-byte-slice integrity guard (r10 corrupt-block probe, same lane
-    # as the N5 scan's): Spark's binaryFile listing silently DROPS
-    # zero-length files, so a truncated-to-empty slice (torn external
-    # writer / partial copy) would vanish from the scan while the
-    # driver-side glob still counts it — the import then zero-fills that z
-    # as if it were a sparse-export gap: silent wrong data. The glob above
-    # already listed every file, so the stat is free.
+    # as the N5 scan's): a truncated-to-empty slice (torn external writer /
+    # partial copy) must not read as an all-zero plane; refuse before any
+    # job runs. The glob above already listed every file, so the stat is
+    # free.
     empties = [p for p in files if os.path.getsize(p) == 0]
     if empties:
         raise ValueError(
             f"zero-byte .tif slice file(s) in {input_dir}: "
             f"{[os.path.basename(p) for p in empties[:5]]}"
-            f"{' ...' if len(empties) > 5 else ''} — Spark's binaryFile "
-            "listing silently drops empty files, so these slices would "
+            f"{' ...' if len(empties) > 5 else ''} — an empty slice would "
             "otherwise read as all zeros. Likely a torn writer or partial "
             "copy; restore or remove the affected files."
         )
-    order = {os.path.basename(p): z for z, p in enumerate(files)}
-    from n5_dask_spark.sources.n5.reader import escape_hadoop_glob
+    return files
 
-    df = spark.read.format("binaryFile").load(
-        os.path.join(escape_hadoop_glob(input_dir), "*.tif")
+
+def _series_paths(spark: SparkSession, files: list[str]) -> DataFrame:
+    """(z, path, fname) rows for ``_series_files``' list. Built from the
+    driver's own listing: a file-source load of the same paths would list
+    them again, as a Spark job once there are more than
+    ``parallelPartitionDiscovery.threshold`` (32) of them."""
+    return spark.createDataFrame(
+        [(z, p, os.path.basename(p)) for z, p in enumerate(files)],
+        "z int, path string, fname string",
     )
-    order_df = spark.createDataFrame(
-        [(k, v) for k, v in order.items()], "fname string, z int"
+
+
+def _read_slice(path: str) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _read_slices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    rows = (
+        (int(z), _read_slice(path), fname)
+        for pdf in batches
+        for z, path, fname in zip(pdf["z"], pdf["path"], pdf["fname"])
     )
-    return (
-        df.withColumn("fname", F.element_at(F.split("path", "/"), -1))
-        .join(F.broadcast(order_df), "fname")
-        .select("z", F.col("content").alias("raw"), "fname")
+    yield from bounded_frames(rows, ["z", "raw", "fname"], lambda r: len(r[1]))
+
+
+def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
+    """S1: lazy scan of a z-slice TIFF series -> (z, raw, fname) rows, z in
+    ``_series_files`` order."""
+    tune_session(spark)
+    return _series_paths(spark, _series_files(input_dir)).mapInPandas(
+        _read_slices, schema="z int, raw binary, fname string"
     )
 
 
@@ -456,13 +473,10 @@ def tif_series_to_n5(
 
     Each slice decodes into a (1, Y, X) block; the standard rechunk shuffle
     re-tiles to the requested block grid; one task writes each block."""
-    slices = tif_series_scan(spark, input_dir)
-    # dims/dtype probe driver-side from the glob (header/IFD reads only,
-    # no pixel I/O) — running the binaryFile scan for limit(1) and count()
-    # would execute the whole scan+join plan twice more per import
-    files = sorted(_glob.glob(os.path.join(_glob.escape(input_dir), "*.tif")))
-    if not files:  # same contract as tif_series_scan, not a bare IndexError
-        raise FileNotFoundError(f"no *.tif in {input_dir}")
+    tune_session(spark)
+    files = _series_files(input_dir)
+    slices = _series_paths(spark, files)
+    # dims/dtype probe driver-side (header/IFD reads only, no pixel I/O)
     (probe_h, probe_w), probe_dt = tiff_probe_file(files[0])
     n_z = len(files)
     src_type = data_type_of(probe_dt)
@@ -472,9 +486,10 @@ def tif_series_to_n5(
         # byte-bounded output framing is fuse/udfbatch's: LZW/deflate series
         # expand on decode, so one frame per input batch scales with the ratio
         for pdf in batches:
-            for z, raw, fname in zip(pdf["z"], pdf["raw"], pdf["fname"]):
+            for z, path, fname in zip(pdf["z"], pdf["path"], pdf["fname"]):
+                raw = _read_slice(path)
                 try:
-                    arr = decode_tiff(bytes(raw))
+                    arr = decode_tiff(raw)
                 except Exception as e:
                     # name the FILE: a long series dying on one corrupt
                     # slice must point at it (decode_block_at discipline)

@@ -231,10 +231,8 @@ def test_tif_series_to_n5_empty_dir(spark):
 
 
 def test_series_scan_with_hostile_filenames(spark):
-    """binaryFile's path column is NOT URI-encoded in this Spark (pinned
-    empirically: space/%/#/+ come back raw), so the basename join in
-    tif_series_scan matches files with such names. This test is the canary
-    if a Spark upgrade changes that encoding."""
+    """Slice files named with space/%/#/+ scan like any other: the scan
+    reads the driver's own glob results, never a re-encoded path."""
     from n5_dask_spark.sources.tiff import tif_series_scan, write_tiff
 
     src = tmpdir()
@@ -296,3 +294,36 @@ def test_series_sink_claims_marker_and_refuses_second_writer(spark):
     assert n5_to_tif_series(spark, FIXTURE, FIXTURE_DS, out_dir) == 27
     assert not os.path.exists(marker)  # released: series visible
     assert tif_series_scan(spark, out_dir).count() == 27
+
+
+def test_series_import_lists_once_on_the_driver(spark):
+    """A series above Spark's parallel-listing threshold (32 root paths)
+    used to cost a listing job, one task per slice, for files the driver
+    had already globbed. Every stage of one import now belongs to the
+    sink's collect, and only the top-level *.tif files are slices."""
+    from n5_dask_spark.sources.n5.reader import read_full
+    from n5_dask_spark.sources.n5.writer import temp_container
+    from n5_dask_spark.sources.tiff import tif_series_to_n5, write_tiff
+
+    src = tmpdir()
+    vol = np.arange(40 * 4 * 6, dtype=np.uint16).reshape(40, 4, 6)  # zyx
+    for z in range(40):
+        write_tiff(os.path.join(src, f"s{z:03d}.tif"), vol[z])
+    os.makedirs(os.path.join(src, "nested"))
+    write_tiff(os.path.join(src, "nested", "s999.tif"), np.ones((4, 6), np.uint16))
+    container = temp_container()
+    sc = spark.sparkContext
+    group = f"tiff-import-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "one tif_series_to_n5 call")
+    try:
+        tif_series_to_n5(spark, src, container, "a/s0", [6, 4, 8])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    names = [
+        st.getStageInfo(s).name
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    assert names and all(n.startswith("collect at") for n in names), names
+    np.testing.assert_array_equal(read_full(spark, container, "a/s0"), vol.transpose(2, 1, 0))
