@@ -47,7 +47,12 @@ from pyspark.sql.types import (
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
-from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes
+from n5_dask_spark.sources.n5.metadata import (
+    DatasetAttributes,
+    _read_text,
+    attributes_path,
+    read_attributes,
+)
 from n5_dask_spark.udfbatch import bounded_frames
 
 BLOCK_SCHEMA = StructType(
@@ -374,7 +379,8 @@ def scan_block_files(
     degrades to fill-value instead of failing the job.
 
     A fully-sparse dataset (attributes.json, zero block files) is legal N5
-    and scans as an EMPTY DataFrame, not an error.
+    and scans as an EMPTY DataFrame, not an error; a dataset without an
+    attributes.json raises FileNotFoundError.
 
     The output ALWAYS carries all three coordinate columns — for
     ndim < 3 the missing ones are constant 0 — so downstream block
@@ -432,6 +438,13 @@ def scan_block_files(
         except Exception as exc:  # binaryFile raises when the glob matches nothing
             if not _is_missing_path(exc):
                 raise
+            # no block files: a sparse dataset scans empty, but a dataset
+            # that does not exist at all must not read as zero rows
+            if _read_text(attributes_path(container, dataset)) is None:
+                raise FileNotFoundError(
+                    f"N5 dataset {dataset!r} not found in {container}: "
+                    "no attributes.json"
+                ) from None
             return _empty()
     # grid coords are the last `ndim` path segments: .../gx/gy/gz
     pat = r"/(\d+)" * ndim + r"$"

@@ -1,4 +1,5 @@
-"""Pure-Python LZ4 codec: spec vectors, roundtrips, N5 integration.
+"""LZ4 codec: spec vectors, roundtrips, the liblz4 wrapper contract, N5
+integration.
 
 The roundtrip tests alone can't catch a self-consistent-but-nonstandard
 codec, so xxhash32 is pinned to published XXH32 vectors and the block
@@ -88,6 +89,33 @@ def test_block_roundtrip_runs(runs):
     # run-heavy data exercises overlapping matches (offset < match length)
     data = b"".join(bytes([b]) * n for b, n in runs)
     assert lz4_block_decompress(lz4_block_compress(data), len(data)) == data
+
+
+# -- liblz4 wrapper contract -------------------------------------------------
+# pyarrow's Codec.decompress returns as many bytes as asked for and raises
+# OSError on corrupt input; the wrapper must turn both into ValueError.
+
+
+def test_block_decompress_refuses_one_byte_too_many():
+    data = bytes(range(200)) * 30
+    packed = lz4_block_compress(data)
+    with pytest.raises(ValueError, match="fewer than the expected"):
+        lz4_block_decompress(packed, len(data) + 1)
+
+
+def test_block_decompress_refuses_one_byte_too_few():
+    data = bytes(range(200)) * 30
+    packed = lz4_block_compress(data)
+    with pytest.raises(ValueError, match="corrupt LZ4 block"):
+        lz4_block_decompress(packed, len(data) - 1)
+
+
+def test_block_decompress_corrupt_stream_raises_value_error_not_os_error():
+    # a match offset reaching before the output start
+    stream = bytes([0x4F]) + b"abcd" + bytes([0xFF, 0x00, 0x00]) + bytes([0x50]) + b"efghi"
+    with pytest.raises(ValueError, match="corrupt LZ4 block") as ei:
+        lz4_block_decompress(stream, 4 + 19 + 5)
+    assert not isinstance(ei.value, OSError)
 
 
 # -- LZ4Block stream framing ------------------------------------------------
@@ -215,8 +243,8 @@ def test_cli_lz4_e2e(spark, capsys):
 
 
 def test_blosc_now_supported_but_exotic_variants_raise():
-    # blosc gained a pure-Python implementation (sources/n5/blosc.py);
-    # the default (lz4 + byte-shuffle) encodes, unsupported cnames still
+    # blosc is implemented (sources/n5/blosc.py); the default
+    # (lz4 + byte-shuffle) encodes, unsupported cnames still
     # fail loudly instead of silently mis-encoding
     from n5_dask_spark.sources.n5.codec import decode_block, encode_block
 
@@ -225,16 +253,8 @@ def test_blosc_now_supported_but_exotic_variants_raise():
     np.testing.assert_array_equal(
         decode_block(encode_block(arr, "uint8", spec), "uint8", spec), arr
     )
-    from n5_dask_spark.sources.n5 import blosc as _blosc
-
-    if _blosc._zstd() is not None:
-        # zstd is pyarrow-gated: with libzstd present it encodes for real
-        spec_z = {"type": "blosc", "cname": "zstd", "typesize": 1}
-        np.testing.assert_array_equal(
-            decode_block(encode_block(arr, "uint8", spec_z), "uint8", spec_z), arr
-        )
-    # every Blosc1 internal codec now encodes (blosclz/snappy landed r8)
-    for cname in ("blosclz", "snappy"):
+    # every Blosc1 internal codec encodes
+    for cname in ("blosclz", "snappy", "zstd"):
         spec_c = {"type": "blosc", "cname": cname, "typesize": 1}
         np.testing.assert_array_equal(
             decode_block(encode_block(arr, "uint8", spec_c), "uint8", spec_c), arr

@@ -139,6 +139,18 @@ def test_fully_sparse_dataset_scans_empty(spark):
     assert reg.shape == (10, 10, 4) and (reg == 0).all()
 
 
+def test_missing_dataset_scan_raises(spark):
+    """A dataset with no attributes.json and no block files does not exist:
+    the scan must name it instead of returning zero rows (the sparse case
+    above keeps scanning empty)."""
+    from n5_dask_spark.sources.n5.reader import scan_block_files
+    from n5_dask_spark.sources.n5.writer import temp_container
+
+    missing = os.path.join(temp_container(), "nope.n5")
+    with pytest.raises(FileNotFoundError, match="'vol/s0' not found"):
+        scan_block_files(spark, missing, "vol/s0")
+
+
 def test_missing_path_classified_by_error_class(spark):
     """_is_missing_path prefers AnalysisException's structured error class
     (getCondition) over message sniffing; unrelated analysis errors and
